@@ -72,9 +72,10 @@ object Convert {
     val conf = spark.sessionState.newHadoopConf()
     val fs = rootPath.getFileSystem(conf)
 
-    val st = DeltaSink.replayState(spark, rootPath, forbidDv = "convert_to_iceberg")
+    val st = graft.sources.DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw IcebergReadException(
       s"convert_to_iceberg: `$path` has no _delta_log — not a Delta table")
+    DeltaSink.rejectDv(st, path, "convert_to_iceberg")
     val schemaJson = st.schemaJson.getOrElse(throw IcebergReadException(
       s"convert_to_iceberg: `$path` log declares no schema"))
     val mapping = st.conf.getOrElse("delta.columnMapping.mode", "none")
@@ -546,22 +547,13 @@ object Convert {
     }
 
     // ---- existing _delta_log: only our own conversions may re-sync ----
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = DeltaSink.replayState(spark, rootPath)
+    val st = graft.sources.DeltaLog.snapshot(spark, rootPath)
     if (st.exists) {
-      val commitRe = """(\d{20})\.json""".r
-      val commits = fs.listStatus(logDir).toSeq
-        .filter(s0 => commitRe.pattern.matcher(s0.getPath.getName).matches())
-        .sortBy(_.getPath.getName)
-      val markers = commits.map { c =>
-        val in = fs.open(c.getPath)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        text.linesIterator.flatMap { ln =>
-          val node = mapper.readTree(ln)
+      val markers = graft.sources.DeltaLog.commits(fs, rootPath).values.toSeq.map { c =>
+        graft.sources.DeltaLog.actions(fs, c).flatMap { node =>
           Option(node.path("commitInfo").path(IcebergSnapshotKey))
             .filter(!_.isMissingNode).map(_.asLong())
-        }.toSeq.headOption
+        }.headOption
       }
       if (markers.exists(_.isEmpty)) throw IcebergReadException(
         s"convert_to_delta: `$path` already has a _delta_log this converter " +
@@ -608,22 +600,7 @@ object Convert {
         s""""size":${f.size},"modificationTime":$modTime,"dataChange":true,""" +
         s""""stats":${esc(stats)}}}"""
     }
-    fs.mkdirs(logDir)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw IcebergReadException(
-      s"convert_to_delta: `$path` Delta commit $version already exists — " +
-        "another writer got there first")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((lines.result().mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw IcebergReadException(
-        s"convert_to_delta: `$path` Delta commit $version already exists — " +
-          "another writer got there first")
-    }
+    graft.sources.DeltaLog.commit(fs, rootPath, version, lines.result())
     live.size.toLong
   }
 }

@@ -22,6 +22,9 @@ import org.apache.spark.sql.types._
   * else is driver metadata — one footer read per written file (the same
   * O(new files) delta-spark pays to collect stats) and one commit JSON.
   *
+  * Table state comes from [[graft.sources.DeltaLog.snapshot]], the same
+  * replay the native reader uses, and every commit goes through
+  * [[graft.sources.DeltaLog.commit]] (staged, then renamed into place).
   * Single-writer contract: the commit fails loudly if the target version
   * file already exists — optimistic-concurrency retry is a coordinator
   * feature this library intentionally leaves to a connector jar. */
@@ -69,6 +72,8 @@ private[catalog] object MergeClauses {
 }
 
 object DeltaSink {
+  import graft.sources.DeltaLog
+  import graft.sources.DeltaLog.{AddFile, Protocol, Snapshot}
   import graft.sources.DeltaNative.DeltaReadException
 
   private val mapper = new ObjectMapper()
@@ -92,7 +97,6 @@ object DeltaSink {
     val spark = df.sparkSession
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val partCols: Seq[String] = options.get("partition_by").toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     partCols.find(c => !df.schema.fieldNames.contains(c)).foreach { c =>
@@ -104,13 +108,13 @@ object DeltaSink {
     val rtOpt = options.get("row_tracking").exists(_.toBoolean)
 
     // ---- existing-table state (checkpoint + commit JSONs after it) ----
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     val creating = !st.exists
     val tableSchemaJson = st.schemaJson
     val tablePartCols = st.partCols
     val tableConf = st.conf
     val live = st.live
-    val txnVersions = st.txnVersions
+    val txnVersions = st.txns
     // column-mapped tables (mode=name): the frame arrives under LOGICAL
     // names; data files, partition dirs and stats keys carry PHYSICAL
     // names per the protocol — rename before the write. mode=id would
@@ -221,129 +225,21 @@ object DeltaSink {
       lines += s"""{"metaData":${mapper.writeValueAsString(meta)}}"""
     }
     // an advanced identity high-water mark re-commits the metaData with the
-    // updated field metadata (same table id — metaDataJson probes the log)
+    // updated field metadata (same table id)
     identitySchemaUpdate.foreach { ns =>
-      lines += s"""{"metaData":${metaDataJson(spark, fs, logDir, ns,
-        tablePartCols, tableConf)}}"""
+      lines += s"""{"metaData":${metaDataJson(tableId(st), ns, tablePartCols, tableConf)}}"""
     }
-    if (overwrite && !creating) live.foreach { case (p, e) =>
-      lines += s"""{"remove":{"path":${esc(p)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(e)}}}"""
+    if (overwrite && !creating) live.values.foreach { e =>
+      lines += removeJson(e, System.currentTimeMillis(), dataChange = true)
     }
     val alloc = new RowIdAllocator(st, version, forceActive = creating && rtOpt)
-    newFiles.foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    newFiles.foreach(f => lines += alloc.addJson(f, dataChange = true, path))
     alloc.domainLine.foreach(lines += _)
-    fs.mkdirs(logDir)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there " +
-        "first; this native writer does not do optimistic-concurrency retry")
-    val staged = new Path(logDir, s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there " +
-          "first; this native writer does not do optimistic-concurrency retry")
-    }
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
   }
 
-  private final case class NewFile(rel: String, size: Long, modTime: Long,
+  private[catalog] final case class NewFile(rel: String, size: Long, modTime: Long,
     partitionValues: Map[String, String], stats: String)
-
-  /** One live file in the replayed writer-side state. */
-  /** `add.deletionVector` carried through replay verbatim — checkpoints
-    * and re-emitted adds must not lose it (a dropped DV resurrects
-    * deleted rows). */
-  private[catalog] final case class DvInfo(storageType: String, payload: String,
-    offset: Option[Int], sizeInBytes: Int, cardinality: Long)
-
-  private[catalog] final case class LiveEntry(partitionValues: Map[String, String],
-    size: Long, modTime: Long, stats: Option[String], dv: Option[DvInfo],
-    // PROTOCOL.md Row Tracking: the add action's fresh-row-id base and the
-    // commit version its rows default to — replayed so rewrites can
-    // preserve stable ids and checkpoints can carry them
-    baseRowId: Option[Long] = None,
-    defaultRowCommitVersion: Option[Long] = None) {
-    def hasDv: Boolean = dv.isDefined
-  }
-
-  /** The table's protocol action, replayed so commits that NEED a feature
-    * (deletion vectors) can verify support and emit the spec's upgrade
-    * action when absent — an external protocol-compliant reader ignores
-    * features the protocol does not declare. */
-  private[catalog] final case class ProtoInfo(minReader: Int, minWriter: Int,
-      readerFeatures: Set[String], writerFeatures: Set[String]) {
-    def supportsDv: Boolean =
-      minReader >= 3 && minWriter >= 7 &&
-        readerFeatures.contains("deletionVectors") &&
-        writerFeatures.contains("deletionVectors")
-    /** PROTOCOL.md: upgrading a legacy protocol to table features must
-      * carry over every feature the legacy versions implied, or a writer
-      * honoring only the feature list would stop enforcing them. */
-    def withDeletionVectors: ProtoInfo = {
-      val legacyWriter = Seq(2 -> "appendOnly", 2 -> "invariants",
-        3 -> "checkConstraints", 4 -> "changeDataFeed", 4 -> "generatedColumns",
-        5 -> "columnMapping", 6 -> "identityColumns")
-        .collect { case (v, f) if minWriter >= v && minWriter < 7 => f }
-      val legacyReader =
-        if (minReader >= 2 && minReader < 3) Set("columnMapping") else Set.empty[String]
-      ProtoInfo(3, 7,
-        readerFeatures ++ legacyReader + "deletionVectors",
-        writerFeatures ++ legacyWriter + "deletionVectors")
-    }
-    def supportsColumnMapping: Boolean =
-      (minReader >= 2 && minWriter >= 5 && minWriter < 7) ||
-        (minWriter >= 7 && writerFeatures.contains("columnMapping") &&
-          (minReader < 3 || readerFeatures.contains("columnMapping")))
-    def withColumnMapping: ProtoInfo =
-      if (minReader >= 3 || minWriter >= 7) {
-        // table-features protocol: the feature must be declared explicitly
-        val nr = math.max(minReader, 2)
-        ProtoInfo(nr, minWriter,
-          if (nr >= 3) readerFeatures + "columnMapping" else readerFeatures,
-          if (minWriter >= 7) writerFeatures + "columnMapping" else writerFeatures)
-      } else ProtoInfo(math.max(minReader, 2), math.max(minWriter, 5),
-        readerFeatures, writerFeatures)
-    def json: String = {
-      val rf = if (minReader >= 3)
-        s""","readerFeatures":[${readerFeatures.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-      else ""
-      val wf = if (minWriter >= 7)
-        s""","writerFeatures":[${writerFeatures.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-      else ""
-      s"""{"protocol":{"minReaderVersion":$minReader,"minWriterVersion":$minWriter$rf$wf}}"""
-    }
-  }
-
-  /** Writer-side table state: latest version, declared shape, live files,
-    * and the txn ledger — from the checkpoint (classic single-file,
-    * multi-part, or V2 UUID parquet manifest + sidecars) plus the commit
-    * JSONs after it. The same bounded driver replay every method here
-    * shares; V2 JSON manifests stay read-only (DeltaNative reads them;
-    * this writer never produces them). */
-  private[catalog] final case class TableState(version: Long, schemaJson: Option[String],
-    partCols: Seq[String], conf: Map[String, String],
-    live: scala.collection.mutable.LinkedHashMap[String, LiveEntry],
-    txnVersions: Map[String, Long], exists: Boolean,
-    protocol: Option[ProtoInfo] = None,
-    // live domainMetadata: domain → configuration JSON-string (PROTOCOL.md
-    // "Domain Metadata" — latest action per domain wins, removed=true
-    // tombstones drop the domain; a checkpoint carries the live set)
-    domains: Map[String, String] = Map.empty,
-    // highest inCommitTimestamp observed in the replayed commits — the
-    // monotonicity floor for the NEXT commit on an ICT table
-    lastIct: Option[Long] = None)
 
   // ------------------------------------------------ writer protocol gates
   // PROTOCOL.md: "a writer must implement every writer feature the table's
@@ -375,7 +271,7 @@ object DeltaSink {
 
   /** The writer features the table DEMANDS: the v7 list verbatim, or the
     * set a legacy minWriterVersion implies. */
-  private def demandedWriterFeatures(p: ProtoInfo): Set[String] =
+  private def demandedWriterFeatures(p: Protocol): Set[String] =
     if (p.minWriter >= 7) p.writerFeatures
     else Seq(2 -> "appendOnly", 2 -> "invariants", 3 -> "checkConstraints",
       4 -> "changeDataFeed", 4 -> "generatedColumns", 5 -> "columnMapping",
@@ -388,7 +284,7 @@ object DeltaSink {
     * forbids the operation. `removesData` = the op deletes or rewrites
     * live rows (DELETE/UPDATE/MERGE/overwrite); OPTIMIZE's dataChange=false
     * re-binning is explicitly allowed by the append-only rule. */
-  private[catalog] def writerGates(st: TableState, path: String,
+  private[catalog] def writerGates(st: Snapshot, path: String,
       removesData: Boolean, opName: String): Unit = {
     st.protocol.foreach { p =>
       val demanded = demandedWriterFeatures(p)
@@ -426,14 +322,14 @@ object DeltaSink {
   private[catalog] val MatRowIdKey = "delta.rowTracking.materializedRowIdColumnName"
   private[catalog] val MatRowVerKey = "delta.rowTracking.materializedRowCommitVersionColumnName"
 
-  private[catalog] def rowTrackingSupported(st: TableState): Boolean =
+  private[catalog] def rowTrackingSupported(st: Snapshot): Boolean =
     st.protocol.exists(p => p.minWriter >= 7 &&
       p.writerFeatures.contains("rowTracking"))
-  private[catalog] def rowTrackingEnabled(st: TableState): Boolean =
+  private[catalog] def rowTrackingEnabled(st: Snapshot): Boolean =
     rowTrackingSupported(st) &&
       st.conf.get("delta.enableRowTracking").exists(_.toBoolean)
 
-  private def rowIdHwm(st: TableState): Long =
+  private def rowIdHwm(st: Snapshot): Long =
     st.domains.get(RowTrackingDomain).flatMap { c =>
       val n = mapper.readTree(c).path("rowIdHighWaterMark")
       if (n.isNumber) Some(n.asLong()) else None
@@ -452,7 +348,7 @@ object DeltaSink {
     * advanced high-water mark (one domainMetadata action per commit that
     * allocated anything). Inactive (empty strings, no line) on tables
     * whose protocol does not list rowTracking. */
-  private[catalog] final class RowIdAllocator(st: TableState,
+  private[catalog] final class RowIdAllocator(st: Snapshot,
       commitVersion: Long, forceActive: Boolean = false) {
     val active: Boolean = forceActive || rowTrackingSupported(st)
     private var next: Long = rowIdHwm(st) + 1
@@ -465,6 +361,17 @@ object DeltaSink {
         allocated = true
         s""","baseRowId":$base,"defaultRowCommitVersion":$commitVersion"""
       }
+    /** The add action for a file this commit wrote, with its fresh
+      * row-id range when active. */
+    def addJson(f: NewFile, dataChange: Boolean, path: String): String = {
+      val pv = mapper.createObjectNode()
+      f.partitionValues.foreach { case (k, v) => if (v == null) pv.putNull(k) else pv.put(k, v) }
+      val rt = if (active) fields(statsNumRecords(f.stats, path)) else ""
+      s"""{"add":{"path":${mapper.writeValueAsString(f.rel)},""" +
+        s""""partitionValues":${mapper.writeValueAsString(pv)},"size":${f.size},""" +
+        s""""modificationTime":${f.modTime},"dataChange":$dataChange$rt,""" +
+        s""""stats":${mapper.writeValueAsString(f.stats)}}}"""
+    }
     def domainLine: Option[String] =
       if (!active || !allocated) None
       else Some(s"""{"domainMetadata":{"domain":"$RowTrackingDomain",""" +
@@ -474,14 +381,14 @@ object DeltaSink {
 
   /** Echo a live entry's row-tracking fields on a re-emitted add (DV
     * re-adds, RESTORE, clone) — losing them would re-default every row. */
-  private def rtEchoFields(e: LiveEntry): String =
+  private def rtEchoFields(e: AddFile): String =
     e.baseRowId.map(b => s""","baseRowId":$b""").getOrElse("") +
       e.defaultRowCommitVersion.map(v => s""","defaultRowCommitVersion":$v""").getOrElse("")
 
   /** The materialized column names preservation writes under — demanded
     * from the table configuration (this writer's creation path always sets
     * them alongside delta.enableRowTracking). */
-  private def rtMatCols(st: TableState, path: String): (String, String) = {
+  private def rtMatCols(st: Snapshot, path: String): (String, String) = {
     val id = st.conf.getOrElse(MatRowIdKey, throw DeltaReadException(
       s"`$path`: delta.enableRowTracking is set but the table configuration " +
         s"lacks $MatRowIdKey — cannot preserve stable row ids; use a delta " +
@@ -497,7 +404,7 @@ object DeltaSink {
     * broadcast-joined against scans that must compute each row's stable
     * id: coalesce(materialized, base + row_index). */
   private def rtInfoDf(spark: org.apache.spark.sql.SparkSession,
-      st: TableState, resolve: String => String): DataFrame = {
+      st: Snapshot, resolve: String => String): DataFrame = {
     val schema = StructType(Seq(
       StructField("__rt_key", StringType, nullable = false),
       StructField("__rt_base", LongType, nullable = true),
@@ -516,7 +423,7 @@ object DeltaSink {
     * One validation job per rule, each pruned to the first violation; rules
     * are rare (0–2 per table), so this stays one cheap pass over the frame.
     * NULL check-results PASS per SQL CHECK semantics. */
-  private[catalog] def validateIncomingRows(st: TableState, rows: DataFrame,
+  private[catalog] def validateIncomingRows(st: Snapshot, rows: DataFrame,
       path: String): Unit = {
     import org.apache.spark.sql.functions.{col, expr}
     val schemaOpt = st.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
@@ -569,7 +476,7 @@ object DeltaSink {
   /** Generated columns the incoming frame OMITS are computed from their
     * `delta.generationExpression` in the table's declared column order;
     * frames that already carry every column pass through unchanged. */
-  private[catalog] def computeGeneratedColumns(st: TableState, df: DataFrame): DataFrame = {
+  private[catalog] def computeGeneratedColumns(st: Snapshot, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     val schemaOpt = st.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
     val missing = schemaOpt.toSeq.flatMap(_.fields.toSeq.collect {
@@ -597,7 +504,7 @@ object DeltaSink {
     * DEFAULT), and the high-water mark advances past the supplied extreme.
     * Returns the (possibly widened) frame + the updated table schema to
     * re-commit as metaData when any mark moved. */
-  private[catalog] def applyIdentityColumns(st: TableState, df: DataFrame,
+  private[catalog] def applyIdentityColumns(st: Snapshot, df: DataFrame,
       path: String): (DataFrame, Option[StructType]) = {
     import org.apache.spark.sql.functions.col
     val schemaOpt = st.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
@@ -663,281 +570,6 @@ object DeltaSink {
     (out, if (changed) Some(newSchema) else None)
   }
 
-  /** `stopAt = Some(v)` replays only through commit v — the historical
-    * state RESTORE diffs against. Rejects loudly when v is below a folded
-    * checkpoint (its commits may be gone) or does not exist. */
-  private[catalog] def replayState(spark: org.apache.spark.sql.SparkSession,
-      rootPath: Path, forbidDv: String = "",
-      stopAt: Option[Long] = None): TableState = {
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val live = scala.collection.mutable.LinkedHashMap[String, LiveEntry]()
-    if (!fs.exists(logDir))
-      return TableState(-1L, None, Nil, Map.empty, live, Map.empty, exists = false)
-    val commitRe = """(\d{20})\.json""".r
-    val allCommits = fs.listStatus(logDir).toSeq.flatMap(st => st.getPath.getName match {
-      case commitRe(v) => Some((v.toLong, st.getPath))
-      case _ => None
-    }).sortBy(_._1)
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Nil
-    var conf = Map.empty[String, String]
-    var proto: Option[ProtoInfo] = None
-    val txns = scala.collection.mutable.Map[String, Long]()
-    val domains = scala.collection.mutable.LinkedHashMap[String, String]()
-    var lastIct: Option[Long] = None
-    // one JSON action (commit line or V2 JSON-manifest line) applied to the
-    // replay state — shared by the commit loop and the JSON-manifest path
-    // (remove/commitInfo stay commit-only; a checkpoint's removes are
-    // expired tombstones)
-    def applyActionNode(n: com.fasterxml.jackson.databind.JsonNode): Unit = {
-      if (n.has("txn")) {
-        val t = n.path("txn")
-        val app = t.path("appId").asText()
-        txns(app) = math.max(t.path("version").asLong(),
-          txns.getOrElse(app, Long.MinValue))
-      }
-      if (n.has("protocol")) {
-        val p = n.path("protocol")
-        def feats(k: String): Set[String] = {
-          val f = p.path(k)
-          if (f.isMissingNode || f.isNull) Set.empty
-          else f.elements().asScala.map(_.asText()).toSet
-        }
-        proto = Some(ProtoInfo(p.path("minReaderVersion").asInt(1),
-          p.path("minWriterVersion").asInt(2),
-          feats("readerFeatures"), feats("writerFeatures")))
-      }
-      if (n.has("metaData")) {
-        val m = n.path("metaData")
-        schemaJson = Some(m.path("schemaString").asText())
-        partCols = m.path("partitionColumns").elements().asScala.map(_.asText()).toSeq
-        conf = m.path("configuration").fields().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap
-      }
-      if (n.has("add")) {
-        val a = n.path("add")
-        val dvNode = a.path("deletionVector")
-        val dvInfo: Option[DvInfo] =
-          if (dvNode.isMissingNode || dvNode.isNull) None
-          else Some(DvInfo(dvNode.path("storageType").asText(),
-            dvNode.path("pathOrInlineDv").asText(),
-            Option(dvNode.path("offset")).filter(!_.isMissingNode).map(_.asInt()),
-            dvNode.path("sizeInBytes").asInt(),
-            dvNode.path("cardinality").asLong()))
-        if (dvInfo.isDefined && forbidDv.nonEmpty) throw DeltaReadException(
-          s"`$rootPath`: deletion-vector files — use a delta connector jar " +
-            s"for $forbidDv")
-        def optLong(k: String): Option[Long] = {
-          val x = a.path(k)
-          if (x.isNumber) Some(x.asLong()) else None
-        }
-        live(a.path("path").asText()) = LiveEntry(
-          a.path("partitionValues").fields().asScala
-            .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap,
-          a.path("size").asLong(0L),
-          a.path("modificationTime").asLong(0L),
-          Option(a.path("stats")).filter(s => s.isTextual && s.asText().nonEmpty)
-            .map(_.asText()),
-          dvInfo,
-          baseRowId = optLong("baseRowId"),
-          defaultRowCommitVersion = optLong("defaultRowCommitVersion"))
-      }
-      if (n.has("domainMetadata")) {
-        val d = n.path("domainMetadata")
-        if (d.path("removed").asBoolean(false)) domains.remove(d.path("domain").asText())
-        else domains(d.path("domain").asText()) = d.path("configuration").asText("")
-      }
-    }
-    // classic checkpoint (single OR multi-part — delta-spark splits large
-    // logs across N parts; the union of parts is the state): ingest its
-    // protocol/metaData/add rows
-    val lastCpInfo: Option[(Long, Option[Int])] = {
-      val lc = new Path(logDir, "_last_checkpoint")
-      if (!fs.exists(lc)) None
-      else {
-        val in = fs.open(lc)
-        val node = try mapper.readTree(in) finally in.close()
-        Some((node.path("version").asLong(),
-          Option(node.path("parts")).filter(!_.isMissingNode).map(_.asInt())))
-      }
-    }
-    val lastCp: Option[Long] = lastCpInfo.map(_._1)
-    lastCpInfo.foreach { case (cpV, parts) =>
-      val cpFiles: Seq[Path] = parts match {
-        case None =>
-          val classic = new Path(logDir, f"$cpV%020d.checkpoint.parquet")
-          if (fs.exists(classic)) Seq(classic)
-          else {
-            // V2 checkpoints are UUID-named and found by LISTING (same rule
-            // as the native reader); each manifest — parquet OR json — is
-            // complete on its own
-            val prefix = f"$cpV%020d.checkpoint."
-            val cands = fs.listStatus(logDir).map(_.getPath).filter { p =>
-              val n = p.getName
-              n.startsWith(prefix) && (n.endsWith(".parquet") || n.endsWith(".json"))
-            }
-            if (cands.isEmpty) throw DeltaReadException(
-              s"`$rootPath`: _last_checkpoint names version $cpV but no " +
-                "matching checkpoint manifest exists in _delta_log")
-            Seq(cands.maxBy(_.getName))
-          }
-        case Some(n) => (1 to n).map(i =>
-          new Path(logDir, f"$cpV%020d.checkpoint.$i%010d.$n%010d.parquet"))
-      }
-      cpFiles.find(!fs.exists(_)).foreach { missing =>
-        throw DeltaReadException(
-          s"`$rootPath`: _last_checkpoint names version $cpV but " +
-            s"${missing.getName} does not exist")
-      }
-      def resolveSidecar(p: String): String = {
-        val raw = new Path(java.net.URLDecoder.decode(p, "UTF-8"))
-        (if (raw.isAbsolute) raw
-         else new Path(new Path(logDir, "_sidecars"), raw)).toString
-      }
-      // V2 JSON manifest: newline-delimited actions (the commit encoding)
-      // applied directly; its file actions live in parquet sidecars, read
-      // through the SAME typed ingestion below
-      val cpOpt: Option[org.apache.spark.sql.DataFrame] =
-        if (cpFiles.length == 1 && cpFiles.head.getName.endsWith(".json")) {
-          val in = fs.open(cpFiles.head)
-          val mLines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-          val sidecarNames = Seq.newBuilder[String]
-          mLines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
-            applyActionNode(n)
-            if (n.has("sidecar"))
-              sidecarNames += n.path("sidecar").path("path").asText()
-          }
-          val scPaths = sidecarNames.result().map(resolveSidecar)
-          if (scPaths.isEmpty) None
-          else Some(spark.read.option("mergeSchema", "true").parquet(scPaths: _*))
-        } else {
-          // mergeSchema: parts may split action kinds, the union of part
-          // schemas is the action schema (same rule as the native reader)
-          var cp0 = spark.read.option("mergeSchema", "true")
-            .parquet(cpFiles.map(_.toString): _*)
-          // V2 parquet manifest: its file actions live behind sidecar
-          // pointers — union the sidecar frames in
-          if (cp0.schema.fieldNames.contains("sidecar")) {
-            val scPaths = cp0.filter(org.apache.spark.sql.functions.col("sidecar").isNotNull)
-              .selectExpr("sidecar.path").collect().map(_.getString(0)).toSeq
-              .map(resolveSidecar)
-            if (scPaths.nonEmpty)
-              cp0 = spark.read.option("mergeSchema", "true")
-                .parquet((cpFiles.map(_.toString) ++ scPaths): _*)
-          }
-          Some(cp0)
-        }
-      cpOpt.foreach { cp =>
-      val cols = cp.schema.fieldNames.toSet
-      if (cols.contains("protocol")) {
-        val sub = cp.schema("protocol").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val featSels =
-          if (sub.contains("readerFeatures") && sub.contains("writerFeatures"))
-            Seq("protocol.readerFeatures", "protocol.writerFeatures")
-          else Seq("CAST(NULL AS ARRAY<STRING>)", "CAST(NULL AS ARRAY<STRING>)")
-        cp.filter(org.apache.spark.sql.functions.col("protocol").isNotNull)
-          .selectExpr(Seq("protocol.minReaderVersion", "protocol.minWriterVersion")
-            ++ featSels: _*)
-          .collect().foreach { r =>
-            proto = Some(ProtoInfo(r.getInt(0), r.getInt(1),
-              if (r.isNullAt(2)) Set.empty else r.getSeq[String](2).toSet,
-              if (r.isNullAt(3)) Set.empty else r.getSeq[String](3).toSet))
-          }
-      }
-      if (cols.contains("metaData")) {
-        cp.filter(org.apache.spark.sql.functions.col("metaData").isNotNull)
-          .selectExpr("metaData.schemaString", "metaData.partitionColumns",
-            "metaData.configuration")
-          .collect().foreach { r =>
-            schemaJson = Some(r.getString(0))
-            partCols = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-            conf = if (r.isNullAt(2)) Map.empty else r.getMap[String, String](2).toMap
-          }
-      }
-      if (cols.contains("txn")) {
-        cp.filter(org.apache.spark.sql.functions.col("txn").isNotNull)
-          .selectExpr("txn.appId", "txn.version").collect().foreach { r =>
-            txns(r.getString(0)) = math.max(r.getLong(1),
-              txns.getOrElse(r.getString(0), Long.MinValue))
-          }
-      }
-      if (cols.contains("domainMetadata")) {
-        cp.filter(org.apache.spark.sql.functions.col("domainMetadata").isNotNull)
-          .selectExpr("domainMetadata.domain", "domainMetadata.configuration",
-            "domainMetadata.removed").collect().foreach { r =>
-            if (!r.isNullAt(2) && r.getBoolean(2)) domains.remove(r.getString(0))
-            else domains(r.getString(0)) = Option(r.getString(1)).getOrElse("")
-          }
-      }
-      if (cols.contains("add")) {
-        val sub = cp.schema("add").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val dvSels =
-          if (sub.contains("deletionVector")) Seq(
-            "add.deletionVector.storageType", "add.deletionVector.pathOrInlineDv",
-            "add.deletionVector.offset", "add.deletionVector.sizeInBytes",
-            "add.deletionVector.cardinality")
-          else Seq("CAST(NULL AS STRING)", "CAST(NULL AS STRING)",
-            "CAST(NULL AS INT)", "CAST(NULL AS INT)", "CAST(NULL AS BIGINT)")
-        val rtSels = Seq("baseRowId", "defaultRowCommitVersion").map(f =>
-          if (sub.contains(f)) s"add.$f" else "CAST(NULL AS BIGINT)")
-        cp.filter(org.apache.spark.sql.functions.col("add").isNotNull)
-          .selectExpr(Seq("add.path", "add.partitionValues", "add.size",
-            "add.modificationTime", "add.stats") ++ dvSels ++ rtSels: _*)
-          .collect().foreach { r =>
-            val dvInfo: Option[DvInfo] =
-              if (r.isNullAt(5)) None
-              else Some(DvInfo(r.getString(5), r.getString(6),
-                if (r.isNullAt(7)) None else Some(r.getInt(7)),
-                r.getInt(8), r.getLong(9)))
-            if (dvInfo.isDefined && forbidDv.nonEmpty) throw DeltaReadException(
-              s"`$rootPath`: deletion-vector files — use a delta connector jar " +
-                s"for $forbidDv")
-            live(r.getString(0)) = LiveEntry(
-              if (r.isNullAt(1)) Map.empty else r.getMap[String, String](1).toMap,
-              if (r.isNullAt(2)) 0L else r.getLong(2),
-              if (r.isNullAt(3)) 0L else r.getLong(3),
-              Option(r.getString(4)).filter(_.nonEmpty),
-              dvInfo,
-              baseRowId = if (r.isNullAt(10)) None else Some(r.getLong(10)),
-              defaultRowCommitVersion = if (r.isNullAt(11)) None else Some(r.getLong(11)))
-          }
-      }
-      }
-    }
-    stopAt.foreach { v =>
-      if (lastCp.exists(_ > v)) throw DeltaReadException(
-        s"`$rootPath`: state at version $v is below the folded checkpoint " +
-          s"(${lastCp.get}) — its commits may be vacuumed; use a delta " +
-          "connector jar")
-      if (!allCommits.exists(_._1 == v) && !lastCp.contains(v))
-        throw DeltaReadException(
-          s"`$rootPath`: version $v does not exist (latest: " +
-            s"${(lastCp.toSeq ++ allCommits.map(_._1)).maxOption.getOrElse(-1L)})")
-    }
-    val commits = allCommits.filter { case (v, _) =>
-      lastCp.forall(v > _) && stopAt.forall(v <= _)
-    }
-    commits.foreach { case (_, p) =>
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
-        applyActionNode(n)
-        if (n.has("remove")) live.remove(n.path("remove").path("path").asText())
-        if (n.has("commitInfo") && n.path("commitInfo").has("inCommitTimestamp"))
-          lastIct = Some(math.max(n.path("commitInfo").path("inCommitTimestamp").asLong(),
-            lastIct.getOrElse(Long.MinValue)))
-      }
-    }
-    val version = stopAt.getOrElse(
-      (lastCp.toSeq ++ allCommits.map(_._1)).maxOption.getOrElse(-1L))
-    TableState(version, schemaJson, partCols, conf, live, txns.toMap,
-      exists = lastCp.isDefined || allCommits.nonEmpty, protocol = proto,
-      domains = domains.toMap, lastIct = lastIct)
-  }
-
   /** RESTORE TABLE ... TO VERSION — Delta's RESTORE command: ONE new
     * commit whose add/remove set flips the live-file set back to version
     * `version`'s. Files removed since then RE-ADD with their original
@@ -976,7 +608,7 @@ object DeltaSink {
       dstPath: String): Long = {
     val srcRoot = new Path(srcPath)
     val fs = srcRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, srcRoot)
+    val st = DeltaLog.snapshot(spark, srcRoot)
     if (!st.exists) throw DeltaReadException(s"`$srcPath`: not a Delta table")
     if (st.live.values.exists(_.hasDv)) throw DeltaReadException(
       s"`$srcPath`: table carries deletion vectors — their storage paths are " +
@@ -999,13 +631,12 @@ object DeltaSink {
         s"${esc(k)}:${if (v == null) "null" else esc(v)}"
       }.mkString("{", ",", "}")
       s"""{"add":{"path":${esc(absUri(rel))},"partitionValues":$pv,""" +
-        s""""size":${e.size},"modificationTime":${e.modTime},"dataChange":true${rtEchoFields(e)}""" +
+        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)}""" +
         e.stats.map(s0 => s""","stats":${esc(s0)}""").getOrElse("") + "}}"
     }
     val protoJson = st.protocol.map(_.json).getOrElse(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    fs.mkdirs(dstLog) // metaDataJson probes the log dir for an existing id
-    val metaData = metaDataJson(spark, fs, dstLog,
+    val metaData = metaDataJson(java.util.UUID.randomUUID().toString,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], st.partCols, st.conf)
     // live domains ride along — dropping delta.rowTracking's high-water
     // mark would let the clone's first append allocate row-id ranges that
@@ -1017,7 +648,7 @@ object DeltaSink {
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"CLONE","operationParameters":{"source":${esc(srcPath)}}}}""",
       protoJson,
       s"""{"metaData":$metaData}""") ++ domainLines ++ adds
-    writeCommit(fs, dstLog, 0L, withIct(st, lines), dstPath)
+    DeltaLog.commit(fs, dstRoot, 0L, withIct(st, lines))
     st.live.size.toLong
   }
 
@@ -1034,7 +665,7 @@ object DeltaSink {
     import org.apache.spark.sql.functions.expr
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val key = s"delta.constraints.${name.toLowerCase}"
@@ -1057,15 +688,14 @@ object DeltaSink {
       else if (p.minWriter < 3) Some(p.copy(minWriter = 3).json)
       else None
     }
-    val logDir = new Path(rootPath, "_delta_log")
     lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"ADD CONSTRAINT","operationParameters":{"name":${esc(name)},"expr":${esc(exprSql)}}}}""") ++
       protoLine ++
-      Seq(s"""{"metaData":${metaDataJson(spark, fs, logDir, schema, st.partCols,
+      Seq(s"""{"metaData":${metaDataJson(tableId(st), schema, st.partCols,
         st.conf + (key -> exprSql))}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    DeltaLog.commit(fs, rootPath, st.version + 1, withIct(st, lines))
   }
 
   /** DROP CONSTRAINT <name> — removes the configuration key (the protocol
@@ -1074,7 +704,7 @@ object DeltaSink {
       name: String): Unit = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val key = s"delta.constraints.${name.toLowerCase}"
@@ -1082,14 +712,13 @@ object DeltaSink {
       s"ALTER TABLE: no constraint `$name` on `$path`; known: " +
         st.conf.keys.filter(_.startsWith("delta.constraints."))
           .map(_.stripPrefix("delta.constraints.")).toSeq.sorted.mkString(", "))
-    val logDir = new Path(rootPath, "_delta_log")
     lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"DROP CONSTRAINT","operationParameters":{"name":${esc(name)}}}}""",
-      s"""{"metaData":${metaDataJson(spark, fs, logDir, schema, st.partCols,
+      s"""{"metaData":${metaDataJson(tableId(st), schema, st.partCols,
         st.conf - key)}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    DeltaLog.commit(fs, rootPath, st.version + 1, withIct(st, lines))
   }
 
   /** SET TBLPROPERTIES — `delta.appendOnly` (the writer-v2 gate this
@@ -1117,23 +746,22 @@ object DeltaSink {
       }
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
-    val logDir = new Path(rootPath, "_delta_log")
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"SET TBLPROPERTIES"}}""",
-      s"""{"metaData":${metaDataJson(spark, fs, logDir, schema, st.partCols,
+      s"""{"metaData":${metaDataJson(tableId(st), schema, st.partCols,
         st.conf ++ props)}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    DeltaLog.commit(fs, rootPath, st.version + 1, withIct(st, lines))
   }
 
   def addColumn(spark: org.apache.spark.sql.SparkSession, path: String,
       colName: String, typeDdl: String): Unit = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val schema = DataType.fromJson(st.schemaJson.getOrElse(throw DeltaReadException(
@@ -1165,12 +793,11 @@ object DeltaSink {
       if (!mapped) st.conf
       else st.conf + ("delta.columnMapping.maxColumnId" ->
         newField.metadata.getLong("delta.columnMapping.id").toString)
-    val logDir = new Path(rootPath, "_delta_log")
     lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"ADD COLUMNS","operationParameters":{"column":${esc(colName)},"type":${esc(typeDdl)}}}}""",
-      s"""{"metaData":${metaDataJson(spark, fs, logDir, newSchema, st.partCols, newConf)}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+      s"""{"metaData":${metaDataJson(tableId(st), newSchema, st.partCols, newConf)}}""")
+    DeltaLog.commit(fs, rootPath, st.version + 1, withIct(st, lines))
   }
 
   /** DROP COLUMN — metadata-only on Delta via COLUMN MAPPING: the first
@@ -1196,7 +823,7 @@ object DeltaSink {
       path: String, op: String, colName: String, renameTo: Option[String]): Unit = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val schema = DataType.fromJson(st.schemaJson.getOrElse(throw DeltaReadException(
@@ -1244,7 +871,6 @@ object DeltaSink {
     val newConf = st.conf +
       ("delta.columnMapping.mode" -> "name") +
       ("delta.columnMapping.maxColumnId" -> maxId.toString)
-    val logDir = new Path(rootPath, "_delta_log")
     lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val lines = Seq.newBuilder[String]
     val paramJson = renameTo match {
@@ -1255,45 +881,22 @@ object DeltaSink {
     // column mapping must be declared in the protocol before a compliant
     // reader honors physicalName resolution (legacy reader 2 / writer 5,
     // or the columnMapping feature on a table-features protocol)
-    val curProto = st.protocol.getOrElse(ProtoInfo(1, 2, Set.empty, Set.empty))
+    val curProto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
     if (!curProto.supportsColumnMapping) lines += curProto.withColumnMapping.json
-    lines += s"""{"metaData":${metaDataJson(spark, fs, logDir,
-      StructType(newFields), st.partCols, newConf)}}"""
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines.result()), path)
+    lines += s"""{"metaData":${metaDataJson(tableId(st), StructType(newFields), st.partCols, newConf)}}"""
+    DeltaLog.commit(fs, rootPath, st.version + 1, withIct(st, lines.result()))
   }
 
-  /** metaData action JSON with the table id preserved (latest commit
-    * metaData, else the checkpoint's, else fresh). */
-  private def metaDataJson(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
-      newSchema: StructType, partCols: Seq[String],
+  /** The table id a metaData rewrite carries over: the snapshot's latest
+    * metaData action's, fresh only when the log never recorded one. */
+  private def tableId(st: Snapshot): String =
+    st.metaData.map(_.id).filter(_.nonEmpty).getOrElse(java.util.UUID.randomUUID().toString)
+
+  /** metaData action JSON for table `id`. */
+  private def metaDataJson(id: String, newSchema: StructType, partCols: Seq[String],
       conf: Map[String, String]): String = {
-    val commitRe = """(\d{20})\.json""".r
-    val tableId: String = {
-      val fromCommits = fs.listStatus(logDir).toSeq
-        .filter(s0 => commitRe.pattern.matcher(s0.getPath.getName).matches())
-        .sortBy(_.getPath.getName).reverseIterator.flatMap { c =>
-          val in = fs.open(c.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          text.linesIterator.map(mapper.readTree)
-            .collectFirst { case n if n.has("metaData") =>
-              n.path("metaData").path("id").asText() }
-        }.find(_.nonEmpty)
-      fromCommits.orElse {
-        val cpFile = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-          .filter(n => n.contains(".checkpoint.") && n.endsWith(".parquet"))
-          .sorted.lastOption
-        cpFile.flatMap { name =>
-          val cp = spark.read.parquet(new Path(logDir, name).toString)
-          if (!cp.schema.fieldNames.contains("metaData")) None
-          else cp.where("metaData is not null").selectExpr("metaData.id")
-            .collect().headOption.map(_.getString(0))
-        }
-      }.getOrElse(java.util.UUID.randomUUID().toString)
-    }
     val meta = mapper.createObjectNode()
-    meta.put("id", tableId)
+    meta.put("id", id)
     val fmtN = meta.putObject("format")
     fmtN.put("provider", "parquet"); fmtN.putObject("options")
     meta.put("schemaString", newSchema.json)
@@ -1304,13 +907,36 @@ object DeltaSink {
     mapper.writeValueAsString(meta)
   }
 
+  /** A remove action for live file `e`. It carries `e`'s deletion vector
+    * (the protocol reconciles on (path, DV id), so a bare remove would
+    * leave a DV'd add live) and echoes its row-tracking fields. */
+  private def removeJson(e: AddFile, ts: Long, dataChange: Boolean): String = {
+    val dv = e.dv.map { d =>
+      val o = mapper.createObjectNode()
+      o.put("storageType", d.storageType)
+      o.put("pathOrInlineDv", d.pathOrInlineDv)
+      d.offset.foreach(o.put("offset", _))
+      o.put("sizeInBytes", d.sizeInBytes)
+      o.put("cardinality", d.cardinality)
+      s""","deletionVector":${mapper.writeValueAsString(o)}"""
+    }.getOrElse("")
+    s"""{"remove":{"path":${mapper.writeValueAsString(e.path)},"deletionTimestamp":$ts,""" +
+      s""""dataChange":$dataChange$dv${rtEchoFields(e)}}}"""
+  }
+
+  /** Copy-on-write paths rewrite whole files and cannot carry deletion
+    * vectors through; `op` names the statement in the rejection. */
+  private[catalog] def rejectDv(st: Snapshot, path: String, op: String): Unit =
+    if (st.live.values.exists(_.hasDv)) throw DeltaReadException(
+      s"`$path`: deletion-vector files — use a delta connector jar for $op")
+
   /** PROTOCOL.md "In-Commit Timestamps": when the table enables/demands
     * inCommitTimestamp, every commit's commitInfo action must come FIRST in
     * the commit and carry an `inCommitTimestamp` strictly greater than the
     * previous commit's — readers order history by it instead of file
     * mtimes, which object stores can rewrite. Returns the lines reordered
     * and stamped, or unchanged when the feature is off. */
-  private[catalog] def withIct(st: TableState, lines: Seq[String]): Seq[String] = {
+  private[catalog] def withIct(st: Snapshot, lines: Seq[String]): Seq[String] = {
     val on = st.conf.get("delta.enableInCommitTimestamps").exists(_.toBoolean) ||
       st.protocol.exists(p => demandedWriterFeatures(p).contains("inCommitTimestamp"))
     if (!on) lines
@@ -1335,18 +961,10 @@ object DeltaSink {
       path: String): DataFrame = {
     import org.apache.spark.sql.Row
     val rootPath = new Path(path)
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
-    val proto = st.protocol.getOrElse(ProtoInfo(1, 2, Set.empty, Set.empty))
-    val tableId = {
-      // the latest metaData action's id (same probe the writer uses)
-      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val logDir = new Path(rootPath, "_delta_log")
-      metaDataJson(spark, fs, logDir,
-        DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType],
-        st.partCols, st.conf)
-    }
-    val id = mapper.readTree(tableId).path("id").asText()
+    val proto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
+    val id = st.metaData.map(_.id).getOrElse("")
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row("delta", id, path,
         st.partCols, st.live.size.toLong, st.live.values.map(_.size).sum,
@@ -1363,44 +981,33 @@ object DeltaSink {
         StructField("minWriterVersion", IntegerType, nullable = false))))
   }
 
-  /** Stage + atomically rename one commit JSON at `version`. */
-  private def writeCommit(fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
-      version: Long, lines: Seq[String], path: String): Unit = {
-    val target = new Path(logDir, f"$version%020d.json")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there first")
-    }
-  }
-
   def restore(spark: org.apache.spark.sql.SparkSession, path: String,
       version: Long): (Int, Int) = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val cur = replayState(spark, rootPath, forbidDv = "RESTORE")
+    val cur = DeltaLog.snapshot(spark, rootPath)
     if (!cur.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(cur, path, removesData = true, "RESTORE")
-    val old = replayState(spark, rootPath, forbidDv = "RESTORE",
-      stopAt = Some(version))
+    // the commits below a folded checkpoint may be vacuumed at any time
+    cur.checkpointVersion.filter(_ > version).foreach { cp =>
+      throw DeltaReadException(
+        s"`$path`: state at version $version is below the folded checkpoint " +
+          s"($cp) — its commits may be vacuumed; use a delta connector jar")
+    }
+    val old = DeltaLog.snapshot(spark, rootPath, asOf = Some(version))
+    rejectDv(cur, path, "RESTORE")
+    rejectDv(old, path, "RESTORE")
     if (cur.schemaJson != old.schemaJson) throw DeltaReadException(
       s"`$path`: schema changed since version $version — schema-evolving " +
         "RESTORE needs a delta connector jar")
-    val removes = cur.live.keys.filterNot(old.live.contains).toSeq
+    val removes = cur.live.values.filterNot(e => old.live.contains(e.path)).toSeq
     val adds = old.live.toSeq.filterNot { case (p, _) => cur.live.contains(p) }
     if (removes.isEmpty && adds.isEmpty) return (0, 0)
     def esc(s: String): String = mapper.writeValueAsString(s)
     val now = System.currentTimeMillis()
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":$version}}}"""
-    removes.foreach { rel =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":$now,"dataChange":true${rtEchoFields(cur.live(rel))}}}"""
-    }
+    removes.foreach(e => lines += removeJson(e, now, dataChange = true))
     adds.foreach { case (rel, e) =>
       val pvNode = mapper.createObjectNode()
       e.partitionValues.foreach { case (k, v) =>
@@ -1410,15 +1017,9 @@ object DeltaSink {
       // re-adds keep their ORIGINAL row-id base/default (content identical,
       // rows never moved); the hwm never rewinds, so no domain update
       lines += s"""{"add":{"path":${esc(rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${e.size},"modificationTime":${e.modTime},"dataChange":true${rtEchoFields(e)}$statsPart}}"""
+        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)}$statsPart}}"""
     }
-    val newVersion = cur.version + 1
-    val target = new Path(logDir, f"$newVersion%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $newVersion already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(cur, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    DeltaLog.commit(fs, rootPath, cur.version + 1, withIct(cur, lines.result()))
     (adds.size, removes.size)
   }
 
@@ -1440,7 +1041,7 @@ object DeltaSink {
     import org.apache.spark.sql.Row
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     val schemaJson = st.schemaJson.getOrElse(
       throw DeltaReadException(s"`$path`: no metaData action"))
@@ -1519,16 +1120,16 @@ object DeltaSink {
       fs.delete(tmp, true)
       fs.getFileStatus(dest)
     }
-    val metaRow = Row("graft-checkpoint", schemaJson, st.partCols, st.conf)
+    val metaRow = Row(tableId(st), schemaJson, st.partCols, st.conf)
     val addStructRows: Seq[Row] = st.live.toSeq.map { case (p, e) =>
       val dvRow = e.dv.map(d =>
-        Row(d.storageType, d.payload, d.offset.map(Int.box).orNull,
+        Row(d.storageType, d.pathOrInlineDv, d.offset.map(Int.box).orNull,
           d.sizeInBytes, d.cardinality)).orNull
-      Row(p, e.partitionValues, e.size, e.modTime, false, e.stats.orNull, dvRow,
+      Row(p, e.partitionValues, e.size, e.modificationTime, false, e.stats.orNull, dvRow,
         e.baseRowId.map(Long.box).orNull,
         e.defaultRowCommitVersion.map(Long.box).orNull)
     }
-    val txnRows = st.txnVersions.toSeq
+    val txnRows = st.txns.toSeq
     val domRows = st.domains.toSeq.map { case (d, c) => Row(d, c, false) }
     val featureV2 = st.protocol.exists(p => p.readerFeatures.contains("v2Checkpoint") ||
       demandedWriterFeatures(p).contains("v2Checkpoint"))
@@ -1568,7 +1169,7 @@ object DeltaSink {
         val protoJson = st.protocol.map(_.json).getOrElse(
           s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":${if (cdf) 4 else 2}}}""")
         val metaNode = mapper.createObjectNode()
-        metaNode.put("id", "graft-checkpoint")
+        metaNode.put("id", metaRow.getString(0))
         val fmtNode = metaNode.putObject("format")
         fmtNode.put("provider", "parquet"); fmtNode.putObject("options")
         metaNode.put("schemaString", schemaJson)
@@ -1580,7 +1181,7 @@ object DeltaSink {
           Seq(s"""{"checkpointMetadata":{"version":${st.version}}}""",
             protoJson,
             s"""{"metaData":${mapper.writeValueAsString(metaNode)}}""") ++
-            st.txnVersions.toSeq.map { case (app, v) =>
+            st.txns.toSeq.map { case (app, v) =>
               s"""{"txn":{"appId":${mapper.writeValueAsString(app)},"version":$v}}"""
             } ++
             st.domains.toSeq.map { case (d, c) =>
@@ -1796,8 +1397,7 @@ object DeltaSink {
     import graft.sources.DeletionVectors
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(st, path, removesData = true,
       if (setExprs.nonEmpty) "DV UPDATE" else "DV DELETE")
@@ -1877,11 +1477,8 @@ object DeltaSink {
     // re-match would overcount and resurrect-by-replace — and an affected
     // file's new vector is the UNION of its old positions and the fresh
     // ones (a DV REPLACES its predecessor; it never stacks)
-    val existingDvs: Seq[(String, graft.sources.DeletionVectors.Descriptor)] =
-      st.live.toSeq.flatMap { case (rel, e) =>
-        e.dv.map(d => resolve(rel) -> graft.sources.DeletionVectors.Descriptor(
-          d.storageType, d.payload, d.offset, d.sizeInBytes, d.cardinality))
-      }
+    val existingDvs: Seq[(String, DeletionVectors.Descriptor)] =
+      st.live.toSeq.flatMap { case (rel, e) => e.dv.map(resolve(rel) -> _) }
     val deadDf: Option[DataFrame] =
       if (existingDvs.isEmpty) None
       else Some(graft.sources.DeletionVectors.deletedRows(spark,
@@ -2004,7 +1601,7 @@ object DeltaSink {
     // descriptor and resurrect deleted rows) — the first DV commit
     // upgrades to reader 3 / writer 7 with the deletionVectors feature,
     // legacy-implied features carried over per PROTOCOL.md
-    val curProto = st.protocol.getOrElse(ProtoInfo(1, 2, Set.empty, Set.empty))
+    val curProto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
     if (!curProto.supportsDv) lines += curProto.withDeletionVectors.json
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
@@ -2030,45 +1627,17 @@ object DeltaSink {
         node.put("tightBounds", false)
         mapper.writeValueAsString(node)
       }
-      val oldDvJson = e.dv.map { d =>
-        val o = mapper.createObjectNode()
-        o.put("storageType", d.storageType)
-        o.put("pathOrInlineDv", d.payload)
-        d.offset.foreach(o.put("offset", _))
-        o.put("sizeInBytes", d.sizeInBytes)
-        o.put("cardinality", d.cardinality)
-        s""","deletionVector":${mapper.writeValueAsString(o)}"""
-      }.getOrElse("")
       // the re-add keeps the file's ORIGINAL base/default — rows never
       // moved, so their ids still derive from the original range
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":$nowMs,"dataChange":true$oldDvJson${rtEchoFields(e)}}}"""
+      lines += removeJson(e, nowMs, dataChange = true)
       lines += s"""{"add":{"path":${esc(rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${e.size},"modificationTime":${e.modTime},"dataChange":true${rtEchoFields(e)},""" +
+        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)},""" +
         loosened.map(s0 => s""""stats":${esc(s0)},""").getOrElse("") +
         s""""deletionVector":${mapper.writeValueAsString(dv)}}}"""
     }
-    imageFiles.foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    imageFiles.foreach(f => lines += alloc.addJson(f, dataChange = true, path))
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there first")
-    }
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
     // merged descriptors carry old ∪ new cardinality — report only the
     // rows THIS statement killed
     val carriedOld: Long = existingDvs.collect {
@@ -2091,8 +1660,7 @@ object DeltaSink {
     import graft.sources.DeletionVectors
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
     if (cmMode != "none" && cmMode != "name")
@@ -2128,11 +1696,8 @@ object DeltaSink {
         matColNames.map(n => StructField(n, LongType, nullable = true)))
     // survivors of ONLY the DV'd files, dead positions anti-joined in
     // executors via the reader's decode machinery
-    val dvPairs: Seq[(String, DeletionVectors.Descriptor)] = dvFiles.map { case (rel, e) =>
-      val d = e.dv.get
-      resolve(rel) -> DeletionVectors.Descriptor(
-        d.storageType, d.payload, d.offset, d.sizeInBytes, d.cardinality)
-    }
+    val dvPairs: Seq[(String, DeletionVectors.Descriptor)] =
+      dvFiles.map { case (rel, e) => resolve(rel) -> e.dv.get }
     val byTuple = dvFiles.groupBy(_._2.partitionValues)
     val scans = byTuple.toSeq.map { case (pv, files) =>
       var s0 = spark.read.schema(dataSchema).parquet(files.map(f => resolve(f._1)): _*)
@@ -2164,47 +1729,15 @@ object DeltaSink {
           .drop("__rt_key", "__rt_idx", "__rt_base", "__rt_def")
     }
     val newFiles = writeDataFiles(survivors, rootPath, partColsT.map(physKey), Map.empty)
-    def esc(s: String): String = mapper.writeValueAsString(s)
     val nowMs = System.currentTimeMillis()
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo":{"timestamp":$nowMs,"operation":"REORG","operationParameters":{"applyPurge":"true"}}}"""
-    dvFiles.foreach { case (rel, e) =>
-      // the remove must carry the removed version's DV: the protocol
-      // reconciles on (path, dv-id), so a bare remove would leave the
-      // DV'd add live and DUPLICATE the purged rows
-      val d = e.dv.get
-      val dv = mapper.createObjectNode()
-      dv.put("storageType", d.storageType)
-      dv.put("pathOrInlineDv", d.payload)
-      d.offset.foreach(o => dv.put("offset", o))
-      dv.put("sizeInBytes", d.sizeInBytes)
-      dv.put("cardinality", d.cardinality)
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":$nowMs,"dataChange":false,"deletionVector":${mapper.writeValueAsString(dv)}${rtEchoFields(e)}}}"""
-    }
+    dvFiles.foreach { case (_, e) => lines += removeJson(e, nowMs, dataChange = false) }
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
-    newFiles.foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":false$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    newFiles.foreach(f => lines += alloc.addJson(f, dataChange = false, path))
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there first")
-    }
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
     (dvFiles.size, dvFiles.map(_._2.dv.get.cardinality).sum)
   }
 
@@ -2213,10 +1746,9 @@ object DeltaSink {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, input_file_name, lit}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath,
-      forbidDv = if (setExprs.nonEmpty) "UPDATE" else "DELETE")
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
+    rejectDv(st, path, if (setExprs.nonEmpty) "UPDATE" else "DELETE")
     writerGates(st, path, removesData = true,
       if (setExprs.nonEmpty) "UPDATE" else "DELETE")
     val partColsT = st.partCols
@@ -2295,9 +1827,9 @@ object DeltaSink {
           val lines = Seq.newBuilder[String]
           lines += s"""{"commitInfo":{"timestamp":$now,"operation":"DELETE","operationParameters":{"predicate":${esc0(predicateSql)},"strategy":"metadata-only-partition-drop"}}}"""
           matched.foreach { rel =>
-            lines += s"""{"remove":{"path":${esc0(rel)},"deletionTimestamp":$now,"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+            lines += removeJson(st.live(rel), now, dataChange = true)
           }
-          writeCommit(fs, logDir, st.version + 1, withIct(st, lines.result()), path)
+          DeltaLog.commit(fs, rootPath, st.version + 1, withIct(st, lines.result()))
           return counts.flatten.sum
         }
       }
@@ -2446,25 +1978,11 @@ object DeltaSink {
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
     affectedRel.foreach { rel =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+      lines += removeJson(st.live(rel), System.currentTimeMillis(), dataChange = true)
     }
-    newFiles.foreach { f =>
-      val pvNode = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    newFiles.foreach(f => lines += alloc.addJson(f, dataChange = true, path))
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
     changedCount
   }
 
@@ -2539,9 +2057,9 @@ object DeltaSink {
     import org.apache.spark.sql.functions.{coalesce, col, expr, input_file_name, lit}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath, forbidDv = "MERGE")
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
+    rejectDv(st, path, "MERGE")
     writerGates(st, path, removesData = true, "MERGE")
     val partColsT = st.partCols
     val live: Map[String, Map[String, String]] =
@@ -3077,25 +2595,11 @@ object DeltaSink {
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
     if (doRewrite) affectedRel.foreach { rel =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+      lines += removeJson(st.live(rel), System.currentTimeMillis(), dataChange = true)
     }
-    newFiles.foreach { f =>
-      val pvNode = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    newFiles.foreach(f => lines += alloc.addJson(f, dataChange = true, path))
     alloc.domainLine.foreach(lines += _)
-    val target2 = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target2)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target2, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
     (updatedCount + bsUpdatedCount, insertCount)
     } finally pinned.foreach(_.unpersist(blocking = false))
   }
@@ -3119,9 +2623,9 @@ object DeltaSink {
       where: Option[String] = None): (Int, Int) = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath, forbidDv = "OPTIMIZE")
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
+    rejectDv(st, path, "OPTIMIZE")
     // dataChange=false re-binning is legal under appendOnly (no rows change)
     writerGates(st, path, removesData = false, "OPTIMIZE")
     val partColsT = st.partCols
@@ -3256,8 +2760,8 @@ object DeltaSink {
       val destSt = fs.getFileStatus(dest)
       val pvNode = mapper.createObjectNode()
       pv.foreach { case (k, v) => if (v == null) pvNode.putNull(k) else pvNode.put(k, v) }
-      files.foreach { case (rel, e) =>
-        lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":false${rtEchoFields(e)}}}"""
+      files.foreach { case (_, e) =>
+        lines += removeJson(e, System.currentTimeMillis(), dataChange = false)
         removed += 1
       }
       val stats = footerStats(spark, dest, dataSchema, partColsPhys)
@@ -3268,12 +2772,7 @@ object DeltaSink {
       added += 1
     }
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
     (removed, added)
   }
 
@@ -3299,9 +2798,9 @@ object DeltaSink {
     require(zorderBy.nonEmpty, "optimizeZOrder needs at least one column")
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath, forbidDv = "OPTIMIZE ZORDER")
+    val st = DeltaLog.snapshot(spark, rootPath)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
+    rejectDv(st, path, "OPTIMIZE ZORDER")
     writerGates(st, path, removesData = false, "OPTIMIZE ZORDER")
     if (st.partCols.nonEmpty) throw DeltaReadException(
       s"`$path`: ZORDER on a partitioned table needs per-partition " +
@@ -3419,22 +2918,11 @@ object DeltaSink {
     val alloc = new RowIdAllocator(st, version)
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"OPTIMIZE","operationParameters":{"zOrderBy":${esc(zorderBy.mkString(","))}}}}"""
-    st.live.foreach { case (rel, e) =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":false${rtEchoFields(e)}}}"""
-    }
-    newFiles.foreach { f =>
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":{},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":false$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    st.live.values.foreach(e =>
+      lines += removeJson(e, System.currentTimeMillis(), dataChange = false))
+    newFiles.foreach(f => lines += alloc.addJson(f, dataChange = false, path))
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    DeltaLog.commit(fs, rootPath, version, withIct(st, lines.result()))
     (st.live.size, newFiles.size)
   }
 
@@ -3449,7 +2937,7 @@ object DeltaSink {
     val logDir = new Path(rootPath, "_delta_log")
     if (!fs.exists(logDir))
       throw DeltaReadException(s"`$path` is not a Delta table: no _delta_log directory")
-    val state = replayState(spark, rootPath)
+    val state = DeltaLog.snapshot(spark, rootPath)
     val rootQ = fs.makeQualified(rootPath).toString
     val liveAbs = state.live.keySet.map { rel =>
       val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
@@ -3460,10 +2948,7 @@ object DeltaSink {
     // way the reader does, or vacuum could orphan-collect a live DV (a
     // read error that resurfaces as unreadable deleted rows)
     val liveDvAbs: Set[String] = state.live.values.flatMap(_.dv).flatMap { d =>
-      graft.sources.DeletionVectors.Descriptor(
-        d.storageType, d.payload, d.offset, d.sizeInBytes, d.cardinality)
-        .absolutePath(rootPath)
-        .map(p => fs.makeQualified(p).toString)
+      d.absolutePath(rootPath).map(p => fs.makeQualified(p).toString)
     }.toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     var deleted = 0

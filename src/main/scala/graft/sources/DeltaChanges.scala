@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
@@ -87,17 +87,10 @@ object DeltaChanges {
 
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    if (!fs.exists(logDir))
+    if (!fs.exists(DeltaLog.logDir(rootPath)))
       throw DeltaReadException(s"`$root` is not a Delta table: no _delta_log directory")
 
-    val commitRe = """(\d{20})\.json""".r
-    val commitStatuses = fs.listStatus(logDir).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case commitRe(v) => Some((v.toLong, st))
-        case _ => None
-      })
-      .sortBy(_._1)
+    val commitStatuses = DeltaLog.commits(fs, rootPath)
     if (commitStatuses.isEmpty) throw DeltaReadException(
       s"`$root`: change-feed reads need the commit JSON history; _delta_log " +
         "holds no commit files")
@@ -107,7 +100,7 @@ object DeltaChanges {
     val end = endOpt.getOrElse(latest)
     if (end > latest) throw DeltaReadException(
       s"`$root`: ending_version $end is beyond the latest commit $latest")
-    val have = commitStatuses.map(_._1).toSet
+    val have = commitStatuses.keySet
     // change attribution needs the per-commit JSON: a checkpoint folds
     // versions away and cannot say WHICH commit added a file. The state
     // replay below also walks from 0 so a remove can recover the removed
@@ -121,30 +114,15 @@ object DeltaChanges {
     }
 
     // ---- driver replay: state for remove-lookback + per-commit changes ----
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Nil
-    var tableConf: Map[String, String] = Map.empty
+    var meta: Option[DeltaLog.Metadata] = None
+    def tableConf: Map[String, String] = meta.map(_.configuration).getOrElse(Map.empty)
     // live files keyed by path (CDF rejects DV-bearing commits in range, and
     // out-of-range DV churn never contributes feed rows, so the plain path
     // key — not (path, dvId) — is sufficient for the lookback state)
-    final case class LiveFile(partitionValues: Map[String, String], size: Long,
-        stats: Option[String], hasDv: Boolean,
-        baseRowId: Option[Long], defVer: Option[Long])
-    val state = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
+    val state = scala.collection.mutable.LinkedHashMap[String, DeltaLog.AddFile]()
     val changes = Seq.newBuilder[ChangeFile]
     val versionTs = Seq.newBuilder[(Long, Long)]
 
-    def partValues(a: JsonNode): Map[String, String] =
-      a.path("partitionValues").fields().asScala
-        .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-    def hasDv(a: JsonNode): Boolean = {
-      val d = a.path("deletionVector")
-      !d.isMissingNode && !d.isNull
-    }
-    def longField(a: JsonNode, name: String): Option[Long] = {
-      val n = a.path(name)
-      if (n.isIntegralNumber) Some(n.asLong()) else None
-    }
     def requireBase(b: Option[Long], v: Long, p: String): Option[Long] = {
       if (rtOn && b.isEmpty) throw DeltaReadException(
         s"`$root`: row_tracking=true but file `$p` (commit $v) carries no " +
@@ -153,24 +131,12 @@ object DeltaChanges {
       b
     }
 
-    commitStatuses.takeWhile(_._1 <= end).foreach { case (v, st) =>
-      val in = fs.open(st.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      val nodes = lines.filter(_.nonEmpty).map(mapper.readTree)
+    commitStatuses.rangeTo(end).foreach { case (v, st) =>
+      val nodes = DeltaLog.actions(fs, st)
       val inRange = v >= start
 
       nodes.foreach { n =>
-        if (n.has("metaData")) {
-          val m = n.path("metaData")
-          schemaJson = Some(m.path("schemaString").asText())
-          partCols = m.path("partitionColumns").elements().asScala.map(_.asText()).toSeq
-          tableConf =
-            if (m.has("configuration"))
-              m.path("configuration").fields().asScala
-                .map(e => e.getKey -> e.getValue.asText()).toMap
-            else Map.empty
-        }
+        if (n.has("metaData")) meta = Some(DeltaLog.metadata(n.path("metaData")))
       }
       if (inRange && !tableConf.get("delta.enableChangeDataFeed").exists(_.toBoolean))
         throw DeltaReadException(
@@ -185,39 +151,27 @@ object DeltaChanges {
 
       val cdcNodes = nodes.filter(_.has("cdc"))
       if (inRange) {
-        val ts = nodes.collectFirst { case n if n.has("commitInfo") => n.path("commitInfo") }
-          .map { ci =>
-            if (ci.has("inCommitTimestamp")) ci.path("inCommitTimestamp").asLong()
-            else if (ci.has("timestamp")) ci.path("timestamp").asLong()
-            else st.getModificationTime
-          }
-          .getOrElse(st.getModificationTime)
-        versionTs += ((v, ts))
+        versionTs += ((v, DeltaLog.commitTimestamp(nodes, st)))
         if (cdcNodes.nonEmpty) {
           cdcNodes.foreach { n =>
-            val c = n.path("cdc")
-            changes += ChangeFile(c.path("path").asText(), c.path("size").asLong(0L),
-              partValues(c), v, None, None)
+            val c = DeltaLog.addFile(n.path("cdc"), v)
+            changes += ChangeFile(c.path, c.size, c.partitionValues, v, None, None)
           }
         } else nodes.foreach { n =>
           if (n.has("add") && n.path("add").path("dataChange").asBoolean(false)) {
-            val a = n.path("add")
-            if (hasDv(a)) throw DeltaReadException(
+            val a = DeltaLog.addFile(n.path("add"), v)
+            if (a.hasDv) throw DeltaReadException(
               s"`$root`: commit $v changes rows through a deletion vector but " +
                 "carries no cdc action — the row-level change cannot be " +
                 "reconstructed from add/remove alone; this log's writer did " +
                 "not honor the CDF write protocol")
-            changes += ChangeFile(a.path("path").asText(), a.path("size").asLong(0L),
-              partValues(a), v, Some("insert"),
-              Option(a.path("stats")).filter(s => s.isTextual && s.asText().nonEmpty)
-                .map(_.asText()),
-              requireBase(longField(a, "baseRowId"), v, a.path("path").asText()),
-              longField(a, "defaultRowCommitVersion"))
+            changes += ChangeFile(a.path, a.size, a.partitionValues, v, Some("insert"),
+              a.stats, requireBase(a.baseRowId, v, a.path), a.defaultRowCommitVersion)
           }
           if (n.has("remove") && n.path("remove").path("dataChange").asBoolean(false)) {
-            val rm = n.path("remove")
-            val p = rm.path("path").asText()
-            if (hasDv(rm)) throw DeltaReadException(
+            val rm = DeltaLog.addFile(n.path("remove"), v)
+            val p = rm.path
+            if (rm.hasDv) throw DeltaReadException(
               s"`$root`: commit $v removes a deletion-vector-bearing file with " +
                 "dataChange=true and no cdc action — its live row set cannot " +
                 "be reconstructed as a whole-file delete")
@@ -229,28 +183,24 @@ object DeltaChanges {
                 "deletion vector — emitting all its rows as deletes would " +
                 "resurrect already-deleted positions; no cdc action present")
             changes += ChangeFile(p, prior.size,
-              if (rm.has("partitionValues")) partValues(rm) else prior.partitionValues,
+              if (n.path("remove").has("partitionValues")) rm.partitionValues
+              else prior.partitionValues,
               v, Some("delete"), prior.stats,
-              requireBase(prior.baseRowId, v, p), prior.defVer)
+              requireBase(prior.baseRowId, v, p), prior.defaultRowCommitVersion)
           }
         }
       }
       // state transition runs for EVERY commit ≤ end, in-range or not
       nodes.foreach { n =>
         if (n.has("add")) {
-          val a = n.path("add")
-          state(a.path("path").asText()) = LiveFile(partValues(a),
-            a.path("size").asLong(0L),
-            Option(a.path("stats")).filter(s => s.isTextual && s.asText().nonEmpty)
-              .map(_.asText()),
-            hasDv(a),
-            longField(a, "baseRowId"), longField(a, "defaultRowCommitVersion"))
+          val a = DeltaLog.addFile(n.path("add"), v)
+          state(a.path) = a
         }
         if (n.has("remove")) state.remove(n.path("remove").path("path").asText())
       }
     }
 
-    val schema = DataType.fromJson(schemaJson.getOrElse(
+    val schema = DataType.fromJson(meta.map(_.schemaString).getOrElse(
       throw DeltaReadException(s"`$root`: no metaData action found in the Delta log")))
       .asInstanceOf[StructType]
     (Seq(ChangeType, CommitVersion, CommitTimestamp) ++
@@ -291,7 +241,7 @@ object DeltaChanges {
       if (mappingActive) StructType(schema.fields.map(f => f.copy(name = physName(f))))
       else schema
     val physByLogical = schema.fields.map(f => f.name -> physName(f)).toMap
-    val physPartCols = partCols.map(c => physByLogical.getOrElse(c, c))
+    val physPartCols = meta.get.partitionColumns.map(c => physByLogical.getOrElse(c, c))
 
     def resolve(p: String): String = {
       val decoded = java.net.URLDecoder.decode(p, "UTF-8")

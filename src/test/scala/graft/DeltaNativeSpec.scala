@@ -303,6 +303,29 @@ class DeltaNativeSpec extends SparkSpec {
     assert(df.orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
   }
 
+  test("multi-part checkpoint with a missing part rejects with a typed error") {
+    val root = tempDir("delta_mpcp_missing")
+    import spark.implicits._
+    val schema = Seq((1L, "a")).toDF("id", "v").schema.json
+    val f1 = writePart(root, "part-mpm1.parquet", Seq((1L, "a")).toDF("id", "v"))
+    commit(root, 0, Seq(protocolV1, metaAction(schema), add(f1)))
+    val cpDir = new File(root, "_cp")
+    spark.sql(s"""SELECT named_struct('minReaderVersion', 1, 'minWriterVersion', 2)
+      AS protocol""").coalesce(1).write.mode("overwrite").parquet(cpDir.getPath)
+    val log = new File(root, "_delta_log")
+    java.nio.file.Files.move(
+      cpDir.listFiles().find(_.getName.endsWith(".parquet")).get.toPath,
+      new File(log, f"${0L}%020d.checkpoint.${1}%010d.${2}%010d.parquet").toPath)
+    org.apache.commons.io.FileUtils.deleteDirectory(cpDir)
+    // part 2 of 2 was never written
+    java.nio.file.Files.writeString(new File(log, "_last_checkpoint").toPath,
+      """{"version":0,"size":3,"parts":2}""")
+    val e = intercept[DeltaNative.DeltaReadException] {
+      DeltaNative.read(spark, root.getPath, Map.empty)
+    }
+    assert(e.getMessage.contains("does not exist"), e.getMessage)
+  }
+
   test("version_as_of replays the log to the pinned version") {
     val root = tempDir("delta_timetravel")
     import spark.implicits._
@@ -735,6 +758,9 @@ class DeltaNativeSpec extends SparkSpec {
     val got = DeltaNative.read(spark, root.getPath, Map.empty)
       .orderBy("id").collect().map(_.getLong(0)).toSeq
     assert(got === Seq(0L, 1L, 3L))
+    // the writer's snapshot reconciles the same way: one live file
+    assert(graft.catalog.DeltaSink.describeDetail(spark, root.getPath)
+      .collect().head.getLong(4) === 1L)
   }
 
   test("roaring portable decode: run + bitmap containers, multi-key, 64-bit") {

@@ -408,6 +408,33 @@ class DeltaSinkSpec extends SparkSpec {
     assert(e2.getMessage.contains("checkpoint"))
   }
 
+  test("a commit write that fails part-way leaves no commit behind") {
+    FaultyFileSystem.install(spark)
+    val local = tempDir("dsink_faulty").getPath + "/t"
+    val root = s"faulty://$local"
+    DeltaSink.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, Map.empty)
+    DeltaSink.write(Seq((3L, "c")).toDF("id", "v"), root, Map.empty)
+    def ids: Seq[Long] = readBack(root).select("id").as[Long].collect().sorted.toSeq
+    def commitFile(v: Long) = new java.io.File(s"$local/_delta_log", f"$v%020d.json")
+    def failsCleanly(op: => Any): Unit = {
+      val before = ids
+      val v = DeltaNative.history(spark, root).count()
+      FaultyFileSystem.failNextCommit()
+      intercept[java.io.IOException](op)
+      assert(!commitFile(v).exists, s"a partial commit $v is visible")
+      assert(ids === before)
+      // the failed version number is free for the next writer
+      DeltaSink.write(Seq((100L + v, "n")).toDF("id", "v"), root, Map.empty)
+      assert(commitFile(v).exists)
+      assert(DeltaNative.history(spark, root).count() === v + 1)
+    }
+    failsCleanly(DeltaSink.updateWhere(spark, root, "id = 1", Map("v" -> "'u'")))
+    failsCleanly(DeltaSink.mergeInto(spark, root, Seq((2L, "m"), (9L, "i")).toDF("id", "v"),
+      "t.id = s.id", Map("v" -> "s.v")))
+    failsCleanly(DeltaSink.optimize(spark, root))
+    failsCleanly(DeltaSink.restore(spark, root, 0L))
+  }
+
   test("DELETE FROM: copy-on-write rewrite of only the files holding matches") {
     val root = tempDir("dsink_del").getPath
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v")
@@ -939,6 +966,16 @@ class DeltaSinkSpec extends SparkSpec {
     val viaSql = graft.sqlapi.SqlApi.executePg(spark,
       s"SELECT numFiles, minWriterVersion FROM delta_detail('$root')").head()
     assert(viaSql.getLong(0) === 2L && viaSql.getInt(1) === 4)
+    // the table id survives a checkpoint fold and later metaData rewrites
+    val id = d.getString(1)
+    assert(id.nonEmpty)
+    def idNow: String = DeltaSink.describeDetail(spark, root).collect().head.getString(1)
+    DeltaSink.checkpoint(spark, root)
+    assert(idNow === id)
+    DeltaSink.addColumn(spark, root, "note", "string")
+    assert(idNow === id)
+    DeltaSink.setTableProperties(spark, root, Map("owner" -> "ops"))
+    assert(idNow === id)
   }
 
   test("OPTIMIZE WHERE bin-packs only the matching partition tuples") {
